@@ -3,9 +3,9 @@
 
 Default mode: runs the headline SURVEY.md §2 queries at
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32), plus a crawl-frontier throughput
-job (the BASELINE.json metric is fetched mementos/sec), and prints ONE JSON
-line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's CPU count), plus a
+crawl-frontier throughput job (the BASELINE.json metric is fetched
+mementos/sec), and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...,
@@ -31,7 +31,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
 # Representative subset of the 41 registry queries: every operator family
 # (sample, filter, cluster, score, order, agg/report, dedup, similarity,
@@ -232,21 +232,6 @@ def run_crawl(spark) -> dict:
                 os.environ.get("SPARK_GRAFT_PSNR_SAMPLE", "1")
             ),
             collect_metrics=False,
-            # SPARK_GRAFT_BLOOM_SHARDS=0 → legacy monolithic seen-filter
-            # (A/B lever); unset → the engine's sharded default.
-            # SPARK_GRAFT_BLOOM_BITS sizes the filter (total bits) so the
-            # sharded-vs-monolith crossover A/B can run at design sizing
-            # (~10 bits/key) instead of the smoke default.
-            **(
-                {"bloom_shards": int(os.environ["SPARK_GRAFT_BLOOM_SHARDS"])}
-                if os.environ.get("SPARK_GRAFT_BLOOM_SHARDS")
-                else {}
-            ),
-            **(
-                {"bloom_bits": int(os.environ["SPARK_GRAFT_BLOOM_BITS"])}
-                if os.environ.get("SPARK_GRAFT_BLOOM_BITS")
-                else {}
-            ),
         ),
     )
     t0 = time.time()

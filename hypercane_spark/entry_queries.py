@@ -2365,7 +2365,7 @@ _SURT_SQL = """
     """,
 )
 def crawl_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-seen dedup: SURT-canonicalized anti-join (the exact backstop of
+    """URL-seen dedup: SURT-canonicalized anti-join (the seen dedup of
     streaming/frontier.py:_not_seen), with the SURT computed by
     functions/urls.py:surt_key and mirrored in SQL."""
     from hypercane_spark.functions.urls import surt_key

@@ -20,6 +20,10 @@ in storage`` over a Python list) with scale-free structures:
 Both are probabilistic prefilters; the exactness backstop is a LEFT ANTI
 JOIN against the persisted ``seen`` table (frontier.py) so false positives
 never drop a URL silently — they only cost one extra join row.
+
+The crawl engine no longer uses these filters: its seen dedup is the exact
+anti-join alone, which beat every prefilter shape in same-window A/Bs
+(BENCH.md); the module stays as a tested library.
 """
 
 from __future__ import annotations

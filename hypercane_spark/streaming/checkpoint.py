@@ -35,8 +35,30 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from hypercane_spark.streaming.storage import DEFAULT_STORE, StateStore
+
+# The frontier's associative merge aggregate, per column: duplicate
+# discoveries of a urim keep the max priority, min depth and min
+# discoverer; urir, host and the SURT key are functions of the urim.
+_MERGE_AGGS = {
+    "urir": F.first,
+    "host": F.first,
+    "priority": F.max,
+    "depth": F.min,
+    "discovered_from": F.min,
+    "__surt": F.first,
+}
+
+
+def merge_frontier(log: DataFrame) -> DataFrame:
+    """Fold duplicate discoveries of a urim into one frontier row. Columns
+    the log does not carry are skipped (the streaming ingest has no
+    ``depth``), so every caller shares this one aggregate."""
+    return log.groupBy("urim").agg(
+        *[agg(c).alias(c) for c, agg in _MERGE_AGGS.items() if c in log.columns]
+    )
 
 
 class RoundCheckpoint:
@@ -278,24 +300,10 @@ class RoundCheckpoint:
     def read_frontier_raw(self, spark: SparkSession, upto: int) -> DataFrame:
         """Merged (but not seen-filtered) frontier through round ``upto``:
         the log folded by the engine's associative merge aggregate."""
-        from pyspark.sql import functions as F
-
-        return (
-            self.read_frontier_log(spark, upto)
-            .groupBy("urim")
-            .agg(
-                F.first("urir").alias("urir"),
-                F.first("host").alias("host"),
-                F.max("priority").alias("priority"),
-                F.min("depth").alias("depth"),
-                F.min("discovered_from").alias("discovered_from"),
-            )
-        )
+        return merge_frontier(self.read_frontier_log(spark, upto))
 
     @staticmethod
     def _drop_seen(merged: DataFrame, seen: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         from hypercane_spark.functions.urls import surt_key
 
         return (

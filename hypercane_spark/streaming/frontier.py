@@ -5,7 +5,7 @@ Replaces the reference's sequential Scrapy TimeMap walk
 process BFS with an O(n) list seen-set) with an iterative-batch scheduler
 where every round is one declarative DataFrame job:
 
-    frontier ──anti-join seen (bloom prefilter + exact backstop)
+    frontier ──anti-join seen (exact LEFT ANTI join on the SURT key)
             ──robots gate (broadcast dim join)
             ──politeness: row_number over (host[, salt]) ordered by
               (priority desc, urim asc) ≤ per-host budget
@@ -32,9 +32,10 @@ Scale notes (10^10-URL design):
   plan over that log — no per-round lineage truncation, no O(|frontier|)
   store. Periodic compaction (CrawlConfig.compact_every) bounds the log's
   file count.
-- seen-membership is a sharded bloom prefilter (bit positions computed
-  JVM-side) + LEFT ANTI JOIN exact backstop; the anti-join shuffles only
-  bloom-positive candidates — at steady state a tiny fraction of the round.
+- seen-membership is one exact LEFT ANTI JOIN of the frontier log
+  against the seen table on surt(urim), planned and run in the JVM: no
+  probabilistic prefilter, no filter state to build, broadcast or rebuild
+  on resume, and no row crosses into Python.
 - per-host windows shuffle on host (salted when skewed); AQE handles
   residual skew.
 """
@@ -42,38 +43,28 @@ Scale notes (10^10-URL design):
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hypercane_spark.functions.urls import surt_key
-from hypercane_spark.streaming.bloom import (
-    CuckooFilter,
-    bloom_might_contain,
+from hypercane_spark.streaming.bloom import (  # noqa: F401 -- perfbench's traced run wraps these names on this module
     bloom_or,
     build_bloom,
     build_cuckoo,
     build_sharded_bloom,
     cuckoo_add_df,
-    cuckoo_might_contain,
-    sharded_bloom_might_contain,
     sharded_bloom_or_update,
 )
-from hypercane_spark.streaming.checkpoint import RoundCheckpoint
+from hypercane_spark.streaming.checkpoint import RoundCheckpoint, merge_frontier
 from hypercane_spark.streaming.robots import robots_gate
 
 FRONTIER_SCHEMA = (
     "urim string, urir string, host string, priority double, depth int, "
     "discovered_from string"
 )
-
-# bloom_shards=None auto-select boundary: a 2 MiB (2^24-bit) bitmap is the
-# point where shipping the whole filter as a fresh broadcast every round
-# stops being obviously cheap; beyond it the sharded delta-log filter wins
-# (and at the 10^10-URL design scale, ~12.5 GB, it is the only shape that
-# works at all).
-SHARD_AUTO_MIN_BITS = 1 << 24
 
 
 @dataclass
@@ -89,24 +80,6 @@ class CrawlConfig:
     # robots handling is north_rule-new behavior).
     round_seconds: float | None = None
     salt_hot_hosts: int = 1  # >1 splits hot-host queues for fetch parallelism
-    bloom_bits: int = 1 << 20
-    bloom_hashes: int = 5
-    use_bloom: bool = True
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo" (use_bloom=False → exact)
-    # >0: the seen-filter is the SHARDED distributed (shard, bits) delta
-    # log — shard = pmod(xxhash64(surt), S), bits_per_shard = bloom_bits/S,
-    # each shard built/appended/tested by the task owning it; the driver
-    # never holds a bitmap and no broadcast is shipped per round. This is
-    # the design-scale shape (10^10 URLs → ~12.5 GB of filter → must
-    # shard); S also floors the membership stage's parallelism, keep ≥ the
-    # executor-core count. 0: monolithic driver array + per-round
-    # broadcast — measured 15-20 % faster while the filter is small (no
-    # candidate shuffle, no per-round filter IO), a hard driver-memory/
-    # broadcast wall once it isn't. None (default): auto — monolith while
-    # bloom_bits < SHARD_AUTO_MIN_BITS, sharded at or beyond it (the same
-    # size-based engine auto-select as kmeans in plans/dsa.py).
-    bloom_shards: int | None = None
-    cuckoo_capacity: int = 1 << 18
     # every K checkpointed rounds, fold the delta chain into full
     # frontier/seen snapshots and prune the subsumed delta dirs
     # (RoundCheckpoint.compact): bounds resume-scan file count on long
@@ -169,20 +142,6 @@ class CrawlEngine:
         else:
             self.errors = None
         self.metrics: list[RoundMetrics] = []
-        # incremental seen-filter: OR-updated with each round's newly seen
-        # keys (blooms compose under OR), so the per-round build cost is
-        # O(new keys), not O(entire seen set); rebuilt from the seen table
-        # on resume. seen_filter="cuckoo" swaps in the deletable
-        # fingerprint-table filter (same prefilter + exact-backstop shape).
-        self._bloom: bytes | None = None
-        self._cuckoo = None
-        # sharded-filter handle (cfg.bloom_shards > 0): a distributed
-        # (shard, bits) table; or_update unpersists the stale one per round
-        self._sharded = None
-        # monolithic-path broadcast handles created this round; destroyed
-        # (ckpt mode) or unpersisted (ckpt-less) at round end so filter
-        # broadcasts never accumulate across a long crawl
-        self._stale_broadcasts: list = []
         # ckpt-less merge-on-read delta log: seed part + per-round link
         # parts, each localCheckpointed (with a checkpoint dir the log is
         # the on-disk delta files instead)
@@ -203,45 +162,6 @@ class CrawlEngine:
     def empty_seen(self) -> DataFrame:
         return self.spark.createDataFrame([], "surt string")
 
-    def _shards(self) -> int:
-        """Effective shard count: explicit config wins; None = auto-select
-        by filter size (monolith below SHARD_AUTO_MIN_BITS, 64 shards at or
-        beyond — see CrawlConfig.bloom_shards)."""
-        if self.cfg.bloom_shards is not None:
-            return self.cfg.bloom_shards
-        return 64 if self.cfg.bloom_bits >= SHARD_AUTO_MIN_BITS else 0
-
-    def _bits_per_shard(self) -> int:
-        """bloom_bits is the TOTAL filter size; each shard owns its slice."""
-        return max(64, self.cfg.bloom_bits // self._shards())
-
-    def _filter_root(self) -> str | None:
-        """Where the sharded filter's versioned parquet lives: next to the
-        checkpoint (shared storage on a cluster) when one exists, else a
-        temp dir (local mode). None → build_sharded_bloom makes a tempdir."""
-        if self.ckpt:
-            import os
-
-            return os.path.join(self.ckpt.base, "seen_filter")
-        return None
-
-    def _drop_stale_broadcasts(self) -> None:
-        """Free the monolithic-path filter broadcasts created this round.
-        By round end every consumer plan has been evaluated (checkpoint
-        mode flushes all round state to disk → destroy; ckpt-less mode
-        keeps persisted fetched parts whose recompute could still need the
-        handle → unpersist only, which frees executor copies but keeps the
-        handle re-shippable)."""
-        for b in self._stale_broadcasts:
-            try:
-                if self.ckpt:
-                    b.destroy()
-                else:
-                    b.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._stale_broadcasts.clear()
-
     def _union_parts(self) -> DataFrame:
         """ckpt-less frontier log: the in-memory delta parts (seed
         snapshot + per-round link deltas, each localCheckpointed)."""
@@ -250,73 +170,17 @@ class CrawlEngine:
             raw = raw.unionByName(p)
         return raw
 
-    @staticmethod
-    def _merge_candidates(cand: DataFrame) -> DataFrame:
-        """Fold duplicate discoveries of a urim across the (already
-        seen-filtered) log with the engine's associative merge aggregate.
-        Runs AFTER _not_seen by design — a manual pushdown of the seen
-        anti-join through the aggregate (legal because seen is keyed on
-        surt(urim): a urim's copies are all-seen or all-new), so rows
-        already fetched never enter the merge shuffle. At steady state
-        most log rows ARE seen — without the pushdown the merge would
-        shuffle the whole log every round."""
-        return cand.groupBy("urim").agg(
-            F.first("urir").alias("urir"),
-            F.first("host").alias("host"),
-            F.max("priority").alias("priority"),
-            F.min("depth").alias("depth"),
-            F.min("discovered_from").alias("discovered_from"),
-            F.first("__surt").alias("__surt"),
-        )
-
     # -------------------------------------------------------------- round
 
-    def _not_seen(self, frontier: DataFrame, seen: DataFrame) -> DataFrame:
+    @staticmethod
+    def _not_seen(frontier: DataFrame, seen: DataFrame) -> DataFrame:
+        """Exact seen dedup: one LEFT ANTI join on surt(urim). The seen
+        side is shuffled every round anyway, so a probabilistic prefilter
+        could only spare the candidate-side shuffle of rows it proves new,
+        and paid more than that for its probe, build and broadcast
+        (BENCH.md, seen-set A/B)."""
         cand = frontier.withColumn("__surt", surt_key(F.col("urim")))
-        # A full cuckoo can have FALSE NEGATIVES (failed/evicted inserts) —
-        # a seen URL would test "sure new" and skip the exact backstop, so
-        # once full the prefilter is permanently distrusted and every
-        # candidate takes the exact anti-join path.
-        use_cuckoo = (
-            self.cfg.use_bloom
-            and self.cfg.seen_filter == "cuckoo"
-            and self._cuckoo is not None
-            and self._cuckoo.count > 0
-            and not self._cuckoo.full
-        )
-        if use_cuckoo:
-            flagged = cuckoo_might_contain(
-                cand, "__surt", self._cuckoo, out="__in_bloom"
-            )
-        elif (
-            self.cfg.use_bloom
-            and self._shards() > 0
-            and self._sharded is not None
-        ):
-            flagged = sharded_bloom_might_contain(
-                cand, "__surt", self._sharded, out="__in_bloom"
-            )
-        elif (
-            self.cfg.use_bloom
-            and self._shards() == 0
-            and self._bloom is not None
-        ):
-            flagged = bloom_might_contain(
-                cand,
-                "__surt",
-                self._bloom,
-                self.cfg.bloom_bits,
-                self.cfg.bloom_hashes,
-                broadcast_registry=self._stale_broadcasts,
-            )
-        else:
-            return cand.join(seen, cand["__surt"] == seen["surt"], "left_anti")
-        sure_new = flagged.where(~F.col("__in_bloom")).drop("__in_bloom")
-        maybe = flagged.where(F.col("__in_bloom")).drop("__in_bloom")
-        checked = maybe.join(
-            seen, maybe["__surt"] == seen["surt"], "left_anti"
-        )
-        return sure_new.unionByName(checked)
+        return cand.join(seen, cand["__surt"] == seen["surt"], "left_anti")
 
     def _politeness_select(
         self, allowed: DataFrame
@@ -453,18 +317,7 @@ class CrawlEngine:
             .drop("__pd")
         )
         # collapse duplicate discoveries: max priority, min discoverer
-        links = (
-            links.withColumn("__surt", surt_key(F.col("urim")))
-            .groupBy("urim")
-            .agg(
-                F.first("urir").alias("urir"),
-                F.first("host").alias("host"),
-                F.max("priority").alias("priority"),
-                F.min("depth").alias("depth"),
-                F.min("discovered_from").alias("discovered_from"),
-                F.first("__surt").alias("__surt"),
-            )
-        )
+        links = merge_frontier(links.withColumn("__surt", surt_key(F.col("urim"))))
         # drop already-seen
         links = links.join(seen, links["__surt"] == seen["surt"], "left_anti")
         return links.drop("__surt")
@@ -483,28 +336,6 @@ class CrawlEngine:
             start_round = self.ckpt.rounds()[-1]
             seen = self.ckpt.read_seen(spark, start_round)
             start_round += 1
-            if self.cfg.use_bloom and not seen.isEmpty():
-                if self.cfg.seen_filter == "cuckoo":
-                    # the prefilter must cover the ENTIRE checkpointed seen
-                    # set — a fresh filter holding only post-resume keys
-                    # would test pre-resume URLs "sure new" and re-fetch
-                    # them (skipping the exact backstop)
-                    self._cuckoo = build_cuckoo(
-                        seen, "surt", capacity=self.cfg.cuckoo_capacity
-                    )
-                elif self._shards() > 0:
-                    self._sharded = build_sharded_bloom(
-                        seen,
-                        "surt",
-                        self._shards(),
-                        self._bits_per_shard(),
-                        self.cfg.bloom_hashes,
-                        root=self._filter_root(),
-                    )
-                else:
-                    self._bloom = build_bloom(
-                        seen, "surt", self.cfg.bloom_bits, self.cfg.bloom_hashes
-                    )
         else:
             if self.ckpt:
                 # one-time seed snapshot — the 'round -1' frontier delta;
@@ -513,16 +344,6 @@ class CrawlEngine:
             else:
                 self._parts = [self.seed_frontier(seeds).localCheckpoint()]
             seen = self.empty_seen()
-            # fresh run: no filter may carry over from a previous run()
-            # on this engine — a stale prefilter covering old keys is
-            # harmless for bloom (false positives only) but the sharded
-            # handle would leak its files and a stale cuckoo could give
-            # false negatives on a reseeded crawl
-            self._bloom = None
-            if self._sharded is not None:
-                self._sharded.unpersist()
-                self._sharded = None
-            self._cuckoo = None
 
         fetched_parts: list[DataFrame] = []
         tracker = spark.sparkContext.statusTracker()
@@ -562,10 +383,12 @@ class CrawlEngine:
                 if self.ckpt
                 else self._union_parts()
             )
-            # seen filter FIRST (row-wise bloom/cuckoo prefilter + exact
-            # anti-join backstop), merge aggregate SECOND: fetched rows
-            # stay out of the merge shuffle (see _merge_candidates)
-            cand = self._merge_candidates(self._not_seen(log, seen))
+            # seen anti-join FIRST, merge aggregate SECOND: a manual
+            # pushdown of the anti-join through the aggregate, legal because
+            # seen is keyed on surt(urim) so a urim's copies are all-seen or
+            # all-new. At steady state most log rows ARE seen; without the
+            # pushdown the merge would shuffle the whole log every round.
+            cand = merge_frontier(self._not_seen(log, seen))
             if self.cfg.collect_metrics:
                 m.candidates = cand.count()
             m.timings["dedup"] = time.time() - t0
@@ -662,105 +485,33 @@ class CrawlEngine:
 
             t = time.time()
 
-            def _update_filter() -> None:
-                # O(selected) incremental seen-filter update. Runs
-                # CONCURRENTLY with the checkpoint delta writes below —
-                # the filter job reads only `selected` (persisted) and is
-                # consumed no earlier than next round's _not_seen, while
-                # the writes read fetched/seen — independent inputs, so
-                # overlapping them collapses two-plus sequential job
-                # latencies into one (per-round fixed-cost cut, round 5).
-                if self.cfg.use_bloom and self.cfg.seen_filter == "cuckoo":
-                    # (fp, bucket) pairs computed partition-wise (JVM hash
-                    # + vectorized derive), one batch insert on the driver
-                    # — no per-row Python (mirrors the bloom's
-                    # per-partition build)
-                    if self._cuckoo is None:
-                        self._cuckoo = CuckooFilter(
-                            capacity=self.cfg.cuckoo_capacity
-                        )
-                    if not self._cuckoo.full and not cuckoo_add_df(
-                        self._cuckoo,
-                        selected.select(F.col("__surt").alias("surt")),
-                        "surt",
-                    ):
-                        import warnings
-
-                        warnings.warn(
-                            "cuckoo seen-filter is full; disabling the "
-                            "prefilter (exact anti-join only) for the rest "
-                            "of the crawl — raise cuckoo_capacity",
-                            stacklevel=2,
-                        )
-                elif self.cfg.use_bloom and self._shards() > 0:
-                    # incremental OR into the distributed (shard, bits)
-                    # table; the stale table is unpersisted inside
-                    # or_update so executor storage holds exactly one
-                    # filter
-                    keys = selected.select(F.col("__surt").alias("surt"))
-                    if self._sharded is None:
-                        self._sharded = build_sharded_bloom(
-                            keys,
-                            "surt",
-                            self._shards(),
-                            self._bits_per_shard(),
-                            self.cfg.bloom_hashes,
-                            root=self._filter_root(),
-                        )
-                    else:
-                        self._sharded = sharded_bloom_or_update(
-                            self._sharded, keys, "surt"
-                        )
-                elif self.cfg.use_bloom:
-                    # OR-composed into the running filter
-                    self._bloom = bloom_or(
-                        self._bloom,
-                        build_bloom(
-                            selected.select(F.col("__surt").alias("surt")),
-                            "surt",
-                            self.cfg.bloom_bits,
-                            self.cfg.bloom_hashes,
-                        ),
-                    )
-
             # Append-only seen semantics: this round's delta is the selected
             # surts (distinct within the round; disjoint from `seen` by
-            # construction — every candidate passed the seen anti-join, and
-            # the bloom/cuckoo prefilters have no false negatives on the
-            # paths that skip it). The union IS the seen set; nothing is
-            # ever rewritten.
+            # construction — every candidate passed the seen anti-join).
+            # The union IS the seen set; nothing is ever rewritten.
             delta = selected.select(F.col("__surt").alias("surt")).distinct()
             new_seen = seen.unionByName(delta)
             links = self._extract_links(fetched, new_seen, rnd)
             m.timings["links"] = time.time() - t
 
             t = time.time()
-            from concurrent.futures import ThreadPoolExecutor
-
             if self.ckpt:
                 # Durable state is APPEND-ONLY on both axes: this round's
                 # newly-seen surts AND this round's newly-discovered links
                 # (the frontier delta). Nothing else — the merged frontier
                 # is never written (or cached) anywhere; the next round's
-                # merge-on-read scan consumes these files directly. The
-                # filter update overlaps the writes (independent inputs,
-                # both joined before anything consumes either).
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    fut_f = ex.submit(_update_filter)
-                    fut_w = ex.submit(
-                        self.ckpt.write,
-                        rnd,
-                        links,
-                        delta,
-                        None,  # fetched already written at fetch time
-                        {
-                            "candidates": m.candidates,
-                            "selected": m.selected,
-                            "timings": m.timings,
-                        },
-                    )
-                    fut_f.result()
-                    fut_w.result()
+                # merge-on-read scan consumes these files directly.
+                self.ckpt.write(
+                    rnd,
+                    links,
+                    delta,
+                    None,  # fetched already written at fetch time
+                    {
+                        "candidates": m.candidates,
+                        "selected": m.selected,
+                        "timings": m.timings,
+                    },
+                )
                 if (
                     self.cfg.compact_every
                     and (rnd + 1) % self.cfg.compact_every == 0
@@ -775,13 +526,11 @@ class CrawlEngine:
                 seen = self.ckpt.read_seen(spark, rnd)
             else:
                 # ckpt-less mode: the delta log lives in cluster storage —
-                # localCheckpointed parts, same merge-on-read formula, the
-                # same three-way overlap
-                with ThreadPoolExecutor(max_workers=3) as ex:
-                    fut_f = ex.submit(_update_filter)
+                # localCheckpointed parts, same merge-on-read formula; the
+                # two independent materializations overlap
+                with ThreadPoolExecutor(max_workers=2) as ex:
                     fut_l = ex.submit(links.localCheckpoint)
                     fut_d = ex.submit(delta.localCheckpoint)
-                    fut_f.result()
                     self._parts.append(fut_l.result())
                     seen = seen.unionByName(fut_d.result())
             m.timings["checkpoint"] = time.time() - t
@@ -798,9 +547,7 @@ class CrawlEngine:
             # cache); dropping the per-round selected cache keeps storage
             # memory flat across max_rounds rounds
             selected.unpersist(blocking=False)
-            self._drop_stale_broadcasts()
 
-        self._drop_stale_broadcasts()  # covers the break-on-empty path
         if not fetched_parts:
             return spark.createDataFrame([], FRONTIER_SCHEMA + ", round int")
         out = fetched_parts[0]

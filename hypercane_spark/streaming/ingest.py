@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hypercane_spark.functions.urls import surt_key
+from hypercane_spark.streaming.checkpoint import merge_frontier
 
 DISCOVERED_SCHEMA = (
     "urim string, urir string, host string, priority double, "
@@ -88,16 +89,8 @@ def stream_frontier_merge(
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        work = (
+        work = merge_frontier(
             batch.withColumn("__surt", surt_key(F.col("urim")))
-            .groupBy("urim")
-            .agg(
-                F.first("urir").alias("urir"),
-                F.first("host").alias("host"),
-                F.max("priority").alias("priority"),
-                F.min("discovered_from").alias("discovered_from"),
-                F.first("__surt").alias("__surt"),
-            )
         )
         if seen_dir:
             try:

@@ -7,8 +7,8 @@ append-only delta tables per round (Iceberg appends), periodic compaction
 default binding (``ParquetStateStore``) realizes the same shapes as parquet
 directories with rename-based commits; on a real cluster the engine binds
 ``IcebergStateStore`` (or any other subclass) WITHOUT touching engine code
-— ``RoundCheckpoint`` and the sharded bloom filter route every physical
-read/write/list/publish through this interface.
+— ``RoundCheckpoint`` (and the sharded bloom library in ``bloom.py``)
+route every physical read/write/list/publish through this interface.
 
 Operation → Iceberg mapping (what each method becomes on a real catalog):
 

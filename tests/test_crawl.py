@@ -3,6 +3,8 @@ bloom/cuckoo behavior, robots gating, checkpoint/resume."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,7 +103,7 @@ def test_robots_gate(spark, web, robots, robots_rows):
 
 
 def test_crawl_order_and_seen_match_oracle(spark, web, web_rows, robots, robots_rows, seeds, tmp_path):
-    cfg = CrawlConfig(per_host_budget=4, max_depth=3, max_rounds=20, use_bloom=True)
+    cfg = CrawlConfig(per_host_budget=4, max_depth=3, max_rounds=20)
     eng = CrawlEngine(
         spark, web, robots=robots, checkpoint_dir=str(tmp_path / "ck"), config=cfg
     )
@@ -150,6 +152,23 @@ def test_crawl_resume_equivalence(spark, web, robots, seeds, tmp_path):
     f2 = resumed.run(seed_df, resume=True)
     order_joined = part.pop_order(f1) + resumed.pop_order(f2)
     assert order_joined == order_full
+
+
+def test_seen_dedup_is_one_exact_anti_join(spark, web, robots, seeds, tmp_path):
+    """Once a round has run, the next round's seen dedup plans as ONE
+    JVM LEFT ANTI join on the SURT key, with no Python (MapInPandas)
+    prefilter probe in front of it."""
+    eng = CrawlEngine(
+        spark, web, robots=robots, checkpoint_dir=str(tmp_path / "ck"),
+        config=CrawlConfig(per_host_budget=4, max_depth=2, max_rounds=1),
+    )
+    eng.run(spark.createDataFrame([(u,) for u in seeds], "urim string"))
+    dedup = eng._not_seen(
+        eng.ckpt.read_frontier_log(spark, 0), eng.ckpt.read_seen(spark, 0)
+    )
+    plan = dedup._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert len(re.findall(r"\[__surt#\d+\], \[surt#\d+\], LeftAnti", plan)) == 1, plan
 
 
 def test_salted_politeness_same_selection(spark, web, robots, seeds, tmp_path):
@@ -209,28 +228,6 @@ def test_cuckoo_spark_membership(spark, web):
     assert fp < 25  # 16-bit fingerprints → tiny false-positive rate
 
 
-def test_crawl_cuckoo_filter_matches_oracle(spark, web, web_rows, robots, robots_rows, seeds):
-    from hypercane_spark.oracle.crawl import crawl_oracle
-
-    expect_order, expect_seen = crawl_oracle(
-        web_rows, seeds, robots=robots_rows, per_host_budget=4, max_depth=2,
-        max_rounds=3,
-    )
-    eng = CrawlEngine(
-        spark, web, robots=robots,
-        config=CrawlConfig(
-            per_host_budget=4, max_depth=2, max_rounds=3, seen_filter="cuckoo"
-        ),
-    )
-    seed_df = spark.createDataFrame([(u,) for u in seeds], "urim string")
-    fetched = eng.run(seed_df)
-    assert eng.pop_order(fetched) == expect_order
-    got_seen = {
-        surt_key_py(r["urim"]) for r in fetched.select("urim").collect()
-    }
-    assert got_seen == expect_seen
-
-
 def test_cuckoo_insert_many_vectorized():
     """Batch insert (the engine path) places every key; membership holds."""
     import numpy as np
@@ -250,73 +247,3 @@ def test_cuckoo_insert_many_vectorized():
     assert keys[0] not in cf
     assert cf.insert(keys[0])
     assert keys[0] in cf
-
-
-def test_cuckoo_full_sets_flag_and_engine_falls_back(
-    spark, web, web_rows, robots, robots_rows, seeds
-):
-    """An overfull cuckoo is a false-negative hazard: the filter must
-    report full=True and the engine must keep exact order/seen fidelity by
-    distrusting the prefilter (exact anti-join path)."""
-    from hypercane_spark.oracle.crawl import crawl_oracle
-
-    tiny = CuckooFilter(capacity=4)  # 8 buckets * 4 slots = 32 fingerprints
-    ok = True
-    for i in range(200):
-        ok = tiny.insert(f"http://x.example/{i}") and ok
-    assert not ok and tiny.full
-
-    expect_order, expect_seen = crawl_oracle(
-        web_rows, seeds, robots=robots_rows, per_host_budget=4, max_depth=2,
-        max_rounds=3,
-    )
-    eng = CrawlEngine(
-        spark, web, robots=robots,
-        config=CrawlConfig(
-            per_host_budget=4, max_depth=2, max_rounds=3,
-            seen_filter="cuckoo", cuckoo_capacity=4,  # guaranteed overflow
-        ),
-    )
-    seed_df = spark.createDataFrame([(u,) for u in seeds], "urim string")
-    fetched = eng.run(seed_df)
-    assert eng.pop_order(fetched) == expect_order
-    got_seen = {surt_key_py(r["urim"]) for r in fetched.select("urim").collect()}
-    assert got_seen == expect_seen
-
-
-def test_crawl_resume_equivalence_cuckoo(spark, web, robots, seeds, tmp_path):
-    """Resume must rebuild the cuckoo prefilter from the checkpointed seen
-    table — a fresh filter would test pre-resume URLs 'sure new' and
-    re-fetch them (round-1 ADVICE bug)."""
-    cfg = CrawlConfig(
-        per_host_budget=4, max_depth=2, max_rounds=8, seen_filter="cuckoo"
-    )
-    seed_df = spark.createDataFrame([(u,) for u in seeds], "urim string")
-
-    full = CrawlEngine(
-        spark, web, robots=robots, checkpoint_dir=str(tmp_path / "cfull"),
-        config=cfg,
-    )
-    order_full = full.pop_order(full.run(seed_df))
-
-    cfg_a = CrawlConfig(
-        per_host_budget=4, max_depth=2, max_rounds=3, seen_filter="cuckoo"
-    )
-    part = CrawlEngine(
-        spark, web, robots=robots, checkpoint_dir=str(tmp_path / "cpart"),
-        config=cfg_a,
-    )
-    f1 = part.run(seed_df)
-    cfg_b = CrawlConfig(
-        per_host_budget=4, max_depth=2, max_rounds=8, seen_filter="cuckoo"
-    )
-    resumed = CrawlEngine(
-        spark, web, robots=robots, checkpoint_dir=str(tmp_path / "cpart"),
-        config=cfg_b,
-    )
-    assert resumed._cuckoo is None
-    f2 = resumed.run(seed_df, resume=True)
-    # the rebuilt prefilter actually covers the pre-resume seen set
-    assert resumed._cuckoo is not None and resumed._cuckoo.count > 0
-    order_joined = part.pop_order(f1) + resumed.pop_order(f2)
-    assert order_joined == order_full

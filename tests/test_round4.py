@@ -352,109 +352,6 @@ def test_sharded_bloom_or_update_no_storage_accumulation(spark):
     assert not os.path.exists(sb.root)
 
 
-def test_crawl_monolith_bloom_still_matches_oracle(spark):
-    """bloom_shards=0 keeps the legacy driver-array path working (and the
-    engine now destroys its per-round broadcasts)."""
-    from hypercane_spark.oracle.crawl import crawl_oracle
-    from hypercane_spark.synth import gen_link_graph, gen_robots
-
-    web_rows = gen_link_graph(n_urls=150)
-    schema = (
-        "urim string, urir string, host string, memento_datetime timestamp, "
-        "damage double, priority double, image_id string, "
-        "outlinks array<string>"
-    )
-    cols = [c.split()[0] for c in schema.split(", ")]
-    web = spark.createDataFrame(
-        [tuple(r[c] for c in cols) for r in web_rows], schema
-    )
-    robots_rows = gen_robots()
-    robots = spark.createDataFrame(
-        [(r["host"], r["disallow"], r["crawl_delay"]) for r in robots_rows],
-        "host string, disallow array<string>, crawl_delay double",
-    )
-    seeds = sorted(r["urim"] for r in web_rows)[::10]
-    cfg = CrawlConfig(
-        per_host_budget=3, max_depth=2, max_rounds=8, bloom_shards=0
-    )
-    eng = CrawlEngine(spark, web, robots=robots, config=cfg)
-    fetched = eng.run(
-        spark.createDataFrame([(u,) for u in seeds], "urim string")
-    )
-    got = eng.pop_order(fetched)
-    want, _ = crawl_oracle(
-        web_rows, seeds, robots=robots_rows,
-        per_host_budget=3, max_depth=2, max_rounds=8,
-    )
-    assert got == want
-    assert eng._stale_broadcasts == []  # cleaned up every round
-
-
-def test_crawl_sharded_bloom_matches_oracle_and_cleans_up(spark, tmp_path):
-    """Explicit sharded seen-filter through the whole engine: crawl order
-    exact vs the sequential oracle, filter files live under the checkpoint
-    and stay bounded (snapshot + deltas), no broadcasts created."""
-    from hypercane_spark.oracle.crawl import crawl_oracle
-    from hypercane_spark.synth import gen_link_graph, gen_robots
-
-    web_rows = gen_link_graph(n_urls=150)
-    schema = (
-        "urim string, urir string, host string, memento_datetime timestamp, "
-        "damage double, priority double, image_id string, "
-        "outlinks array<string>"
-    )
-    cols = [c.split()[0] for c in schema.split(", ")]
-    web = spark.createDataFrame(
-        [tuple(r[c] for c in cols) for r in web_rows], schema
-    )
-    robots_rows = gen_robots()
-    robots = spark.createDataFrame(
-        [(r["host"], r["disallow"], r["crawl_delay"]) for r in robots_rows],
-        "host string, disallow array<string>, crawl_delay double",
-    )
-    seeds = sorted(r["urim"] for r in web_rows)[::10]
-    cfg = CrawlConfig(
-        per_host_budget=3, max_depth=2, max_rounds=8, bloom_shards=8
-    )
-    eng = CrawlEngine(
-        spark, web, robots=robots,
-        checkpoint_dir=str(tmp_path / "ck"), config=cfg,
-    )
-    fetched = eng.run(
-        spark.createDataFrame([(u,) for u in seeds], "urim string")
-    )
-    got = eng.pop_order(fetched)
-    want, _ = crawl_oracle(
-        web_rows, seeds, robots=robots_rows,
-        per_host_budget=3, max_depth=2, max_rounds=8,
-    )
-    assert got == want
-    assert eng._sharded is not None
-    assert eng._sharded.root.startswith(str(tmp_path / "ck"))
-    # bounded delta log on disk
-    assert len(os.listdir(eng._sharded.root)) <= eng._sharded.compact_after + 1
-    assert eng._stale_broadcasts == []  # sharded path never broadcasts
-
-
-def test_crawl_config_auto_selects_filter_shape():
-    """bloom_shards=None auto-select: monolith below the 2^24-bit boundary,
-    sharded at/above it; explicit values always win."""
-    from hypercane_spark.streaming.frontier import SHARD_AUTO_MIN_BITS
-
-    class _Eng:
-        _shards = CrawlEngine._shards
-
-    e = _Eng()
-    e.cfg = CrawlConfig()  # default bits 2^20 < 2^24 → monolith
-    assert e._shards() == 0
-    e.cfg = CrawlConfig(bloom_bits=SHARD_AUTO_MIN_BITS)
-    assert e._shards() == 64
-    e.cfg = CrawlConfig(bloom_shards=8)
-    assert e._shards() == 8
-    e.cfg = CrawlConfig(bloom_bits=SHARD_AUTO_MIN_BITS, bloom_shards=0)
-    assert e._shards() == 0
-
-
 # --------------------------------------- new packaged pipelines (7/7)
 
 
@@ -634,65 +531,6 @@ def test_language_id_model_plug_point(spark):
                    df.select("doc_id",
                              language_id("text").alias("lang")).collect()}
     assert fallback == declarative
-
-
-def test_crawl_sharded_resume_equivalence(spark, tmp_path):
-    """Sharded seen-filter + checkpoint resume: an interrupted crawl
-    resumed from the checkpoint fetches exactly what the uninterrupted
-    crawl does (the resume rebuild must cover the ENTIRE checkpointed
-    seen set, or pre-resume URLs re-fetch)."""
-    from hypercane_spark.synth import gen_link_graph, gen_robots
-
-    web_rows = gen_link_graph(n_urls=150)
-    schema = (
-        "urim string, urir string, host string, memento_datetime timestamp, "
-        "damage double, priority double, image_id string, "
-        "outlinks array<string>"
-    )
-    cols = [c.split()[0] for c in schema.split(", ")]
-    web = spark.createDataFrame(
-        [tuple(r[c] for c in cols) for r in web_rows], schema
-    )
-    robots_rows = gen_robots()
-    robots = spark.createDataFrame(
-        [(r["host"], r["disallow"], r["crawl_delay"]) for r in robots_rows],
-        "host string, disallow array<string>, crawl_delay double",
-    )
-    seeds = spark.createDataFrame(
-        [(u,) for u in sorted(r["urim"] for r in web_rows)[::10]],
-        "urim string",
-    )
-
-    def key(df):
-        return sorted(
-            (r["urim"], r["round"]) for r in df.select("urim", "round").collect()
-        )
-
-    base = dict(per_host_budget=3, max_depth=2, bloom_shards=8)
-    full = CrawlEngine(
-        spark, web, robots=robots,
-        checkpoint_dir=str(tmp_path / "full"),
-        config=CrawlConfig(max_rounds=6, **base),
-    ).run(seeds)
-
-    part_dir = str(tmp_path / "part")
-    CrawlEngine(
-        spark, web, robots=robots, checkpoint_dir=part_dir,
-        config=CrawlConfig(max_rounds=3, **base),
-    ).run(seeds)
-    resumed_eng = CrawlEngine(
-        spark, web, robots=robots, checkpoint_dir=part_dir,
-        config=CrawlConfig(max_rounds=6, **base),
-    )
-    resumed_tail = resumed_eng.run(seeds, resume=True)
-    # resumed engine rebuilt the sharded filter from the checkpointed seen
-    assert resumed_eng._sharded is not None
-    # full = rounds 0-5; resumed tail = rounds 3-5 ∪ (checkpointed 0-2)
-    tail_keys = key(resumed_tail)
-    prior_keys = []
-    for rnd in (0, 1, 2):
-        prior_keys += key(resumed_eng.ckpt.read_fetched(spark, rnd))
-    assert sorted(prior_keys + tail_keys) == key(full)
 
 
 # ------------------------------------------------------------- PII scrub
