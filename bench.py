@@ -231,7 +231,6 @@ def run_crawl(spark) -> dict:
             psnr_sample_mod=int(
                 os.environ.get("SPARK_GRAFT_PSNR_SAMPLE", "1")
             ),
-            collect_metrics=False,
         ),
     )
     t0 = time.time()

@@ -210,6 +210,7 @@ def frame_sample(
     bytes_col: str = "bytes",
     key: str = "video_id",
     frame_fmt: str = "png",
+    store=None,
 ) -> DataFrame:
     """Sample every ``every_n``-th frame from video containers → one row
     per sampled frame: (key, frame_idx, bytes).
@@ -227,24 +228,63 @@ def frame_sample(
     Scale shape: one Arrow batch of containers in, a frame batch out —
     row count grows ~n_frames/every_n per video but each output row is a
     single frame, so batch memory is bounded by Arrow's
-    maxRecordsPerBatch × frame size, independent of video length."""
-    out_schema = f"{key} string, frame_idx int, bytes binary"
+    maxRecordsPerBatch × frame size, independent of video length.
+
+    ``store`` (an errors.ErrorStore) switches on skip-not-abort semantics,
+    as in ``decode_stats``: a truncated or undecodable container is
+    recorded (uri = its key, stage, traceback) and yields no frames, and
+    the job continues. Without a store it aborts the stage."""
+    capture = store is not None
+    out_schema = f"{key} string, frame_idx int, bytes binary" + (
+        ", __err_tb string" if capture else ""
+    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import traceback as tb
+
         from hypercane_spark.synth import encode_image, iter_video_frames
 
         for pdf in it:
             keys: list = []
-            idxs: list[int] = []
-            outs: list[bytes] = []
+            idxs: list = []
+            outs: list = []
+            errs: list = []
             for k, b in zip(pdf[key], pdf[bytes_col]):
-                for idx, frame in iter_video_frames(bytes(b), every_n):
+                try:
+                    # a video's frames come out whole or not at all
+                    frames = [
+                        (idx, encode_image(frame, frame_fmt))
+                        for idx, frame in iter_video_frames(bytes(b), every_n)
+                    ]
+                except Exception:
+                    if not capture:
+                        raise
+                    frames, err = [(None, None)], tb.format_exc()
+                else:
+                    err = None
+                for idx, out in frames:
                     keys.append(k)
                     idxs.append(idx)
-                    outs.append(encode_image(frame, frame_fmt))
-            yield pd.DataFrame({key: keys, "frame_idx": idxs, "bytes": outs})
+                    outs.append(out)
+                    errs.append(err)
+            cols = {
+                key: keys,
+                "frame_idx": pd.array(idxs, dtype="Int32"),
+                "bytes": outs,
+            }
+            if capture:
+                cols["__err_tb"] = errs
+            yield pd.DataFrame(cols)
 
-    return df.select(key, bytes_col).mapInPandas(batches, schema=out_schema)
+    out = df.select(key, bytes_col).mapInPandas(batches, schema=out_schema)
+    if not capture:
+        return out
+    from hypercane_spark.errors import split_errors
+
+    annotated = out.localCheckpoint()  # one decode pass feeds both splits
+    ok, errs = split_errors(annotated, stage="frame_sample", key=key)
+    store.record(errs)
+    return ok
 
 
 def image_rank(

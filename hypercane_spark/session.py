@@ -1,7 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are sized for the sandbox (local[32], 128 GiB) but every knob is
-chosen to be scale-free: AQE handles runtime re-planning and skew joins on a
+Local runs use every CPU of the host by default, and every knob is chosen
+to be scale-free: AQE handles runtime re-planning and skew joins on a
 real cluster, shuffle partitions are overridable via env, and Arrow is on for
 every pandas-UDF boundary.
 """
@@ -22,10 +22,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) in the
-    sandbox; on a real cluster pass ``None`` and let spark-submit decide.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    host's CPU count) for local runs; on a real cluster pass ``None`` and
+    let spark-submit decide.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     # local[N,8]: 8 task retries. Python worker spawn is flaky under
     # sandboxed kernels (intermittent "worker exited unexpectedly"); local
     # mode defaults to maxFailures=1 which turns one flaky fork into a job

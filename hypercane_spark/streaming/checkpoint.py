@@ -8,7 +8,7 @@ table snapshots with the same round metadata):
     <base>/round=N/frontier_delta.parquet (ONLY links discovered round N)
     <base>/round=N/seen_delta.parquet     (ONLY surts first seen round N)
     <base>/round=N/fetched.parquet        (per-round fetch output + lineage)
-    <base>/round=N/manifest.json          (counts + per-stage timings)
+    <base>/round=N/manifest.json          (the round's RoundMetrics record)
     <base>/round=N/frontier.parquet ┐ full snapshots: written by compact()
     <base>/round=N/seen.parquet     ┘ (or by the legacy pre-delta layout)
 
@@ -31,13 +31,21 @@ reconstructs frontier + seen exactly — the BASELINE.md resume criterion.
 
 from __future__ import annotations
 
-import json
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hypercane_spark.streaming.storage import DEFAULT_STORE, StateStore
+
+# The state tables' schemas, handed to every read so the store never has
+# to infer them from file footers.
+FRONTIER_SCHEMA = (
+    "urim string, urir string, host string, priority double, depth int, "
+    "discovered_from string"
+)
+SEEN_SCHEMA = "surt string"
 
 # The frontier's associative merge aggregate, per column: duplicate
 # discoveries of a urim keep the max priority, min depth and min
@@ -52,13 +60,22 @@ _MERGE_AGGS = {
 }
 
 
-def merge_frontier(log: DataFrame) -> DataFrame:
+def merge_aggs(columns: list[str] | None = None) -> list[Column]:
+    """The merge aggregate's columns for a log carrying ``columns`` (None:
+    every merge column, as the engine's frontier log and links carry)."""
+    return [
+        agg(c).alias(c)
+        for c, agg in _MERGE_AGGS.items()
+        if columns is None or c in columns
+    ]
+
+
+def merge_frontier(log: DataFrame, aggs: list[Column] | None = None) -> DataFrame:
     """Fold duplicate discoveries of a urim into one frontier row. Columns
     the log does not carry are skipped (the streaming ingest has no
-    ``depth``), so every caller shares this one aggregate."""
-    return log.groupBy("urim").agg(
-        *[agg(c).alias(c) for c, agg in _MERGE_AGGS.items() if c in log.columns]
-    )
+    ``depth``), so every caller shares this one aggregate. ``aggs``: the
+    ``merge_aggs`` of the log's columns, when the caller built them once."""
+    return log.groupBy("urim").agg(*(aggs or merge_aggs(log.columns)))
 
 
 class RoundCheckpoint:
@@ -83,17 +100,23 @@ class RoundCheckpoint:
 
     def read_seeds(self, spark: SparkSession) -> DataFrame:
         return self.store.read_table(
-            spark, os.path.join(self.base, "seeds.parquet")
+            spark,
+            os.path.join(self.base, "seeds.parquet"),
+            schema=FRONTIER_SCHEMA,
         )
 
     def read_frontier_delta(self, spark: SparkSession, rnd: int) -> DataFrame:
         return self.store.read_table(
-            spark, os.path.join(self._dir(rnd), "frontier_delta.parquet")
+            spark,
+            os.path.join(self._dir(rnd), "frontier_delta.parquet"),
+            schema=FRONTIER_SCHEMA,
         )
 
     def read_seen_delta(self, spark: SparkSession, rnd: int) -> DataFrame:
         return self.store.read_table(
-            spark, os.path.join(self._dir(rnd), "seen_delta.parquet")
+            spark,
+            os.path.join(self._dir(rnd), "seen_delta.parquet"),
+            schema=SEEN_SCHEMA,
         )
 
     def write(
@@ -102,7 +125,7 @@ class RoundCheckpoint:
         frontier_delta: DataFrame,
         seen_delta: DataFrame,
         fetched: DataFrame | None,
-        metrics: dict,
+        metrics: dict | Callable[[], dict],
     ) -> None:
         """Both state tables are APPEND-ONLY deltas:
 
@@ -119,7 +142,11 @@ class RoundCheckpoint:
           merge aggregate the engine uses in-loop (max priority / min
           depth / min discovered_from — order-free), then drops seen rows.
           Rows a static robots table would block are re-dropped by
-          robots_gate at the first resumed round, exactly as in-loop."""
+          robots_gate at the first resumed round, exactly as in-loop.
+
+        ``metrics`` is the round's record for the manifest, or a callable
+        that returns it once the tables are written — so counts observed
+        on these very writes land in the manifest."""
         d = self._dir(rnd)
         # independent tables → concurrent jobs (Spark's scheduler interleaves
         # them across the same executors; the driver threads just overlap
@@ -140,6 +167,8 @@ class RoundCheckpoint:
                 f.result()
         # manifest written last = commit marker (atomic-rename semantics
         # in the parquet store; the snapshot commit itself under Iceberg)
+        if callable(metrics):
+            metrics = metrics()
         self.store.put_manifest(
             os.path.join(d, "manifest.json"), {"round": rnd, **metrics}
         )
@@ -152,9 +181,15 @@ class RoundCheckpoint:
             fetched, os.path.join(self._dir(rnd), "fetched.parquet")
         )
 
-    def read_fetched(self, spark: SparkSession, rnd: int) -> DataFrame:
+    def read_fetched(
+        self, spark: SparkSession, rnd: int, schema=None
+    ) -> DataFrame:
+        """``schema``: the written frame's schema, when the caller has it
+        (the fetched columns depend on the engine's payload config)."""
         return self.store.read_table(
-            spark, os.path.join(self._dir(rnd), "fetched.parquet")
+            spark,
+            os.path.join(self._dir(rnd), "fetched.parquet"),
+            schema=schema,
         )
 
     def rounds(self) -> list[int]:
@@ -276,8 +311,8 @@ class RoundCheckpoint:
         deltas. Empty DataFrame when nothing is checkpointed yet."""
         paths = self._axis_paths("seen.parquet", "seen_delta.parquet", upto)
         if not paths:
-            return spark.createDataFrame([], "surt string")
-        return self.store.read_table(spark, *paths)
+            return spark.createDataFrame([], SEEN_SCHEMA)
+        return self.store.read_table(spark, *paths, schema=SEEN_SCHEMA)
 
     def read_frontier_log(self, spark: SparkSession, upto: int) -> DataFrame:
         """RAW frontier log through round ``upto``: newest full snapshot
@@ -295,7 +330,7 @@ class RoundCheckpoint:
             self.store.table_exists(os.path.join(self.base, "seeds.parquet"))
         ):
             paths.insert(0, os.path.join(self.base, "seeds.parquet"))
-        return self.store.read_table(spark, *paths)
+        return self.store.read_table(spark, *paths, schema=FRONTIER_SCHEMA)
 
     def read_frontier_raw(self, spark: SparkSession, upto: int) -> DataFrame:
         """Merged (but not seen-filtered) frontier through round ``upto``:

@@ -38,15 +38,29 @@ Scale notes (10^10-URL design):
   on resume, and no row crosses into Python.
 - per-host windows shuffle on host (salted when skewed); AQE handles
   residual skew.
+
+Per-round record (``RoundMetrics``, also the round's checkpoint manifest):
+every count is an ``observe()`` metric on a job the round runs anyway, so
+the record costs no Spark action. The fetch job, which fills the persisted
+selection, reports the candidates (after the seen anti-join and merge),
+the robots-allowed rows and the fetched rows; the links-delta and
+seen-delta writes report the new links and the seen-set growth, which
+adds to a running seen size (read back from the last manifest on resume).
+
+Fixed per-round cost: a round's plan is rebuilt each round, but the parts
+of it that never change — the SURT key, the robots broadcast and
+predicate, the web projections, the politeness windows and budget, the
+payload-verify UDF column — are built once per engine, and every state
+read hands the store its schema, so no read runs a footer-inference job.
 """
 
 from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hypercane_spark.functions.urls import surt_key
@@ -58,13 +72,14 @@ from hypercane_spark.streaming.bloom import (  # noqa: F401 -- perfbench's trace
     cuckoo_add_df,
     sharded_bloom_or_update,
 )
-from hypercane_spark.streaming.checkpoint import RoundCheckpoint, merge_frontier
-from hypercane_spark.streaming.robots import robots_gate
-
-FRONTIER_SCHEMA = (
-    "urim string, urir string, host string, priority double, depth int, "
-    "discovered_from string"
+from hypercane_spark.streaming.checkpoint import (
+    FRONTIER_SCHEMA,
+    SEEN_SCHEMA,
+    RoundCheckpoint,
+    merge_aggs,
+    merge_frontier,
 )
+from hypercane_spark.streaming.robots import RobotsGate
 
 
 @dataclass
@@ -87,26 +102,52 @@ class CrawlConfig:
     compact_every: int | None = None
     verify_payload: bool = False  # phash/PSNR fidelity check at fetch time
     psnr_sample_mod: int = 1  # >1: deep PSNR audit on 1/mod of image ids
-    collect_metrics: bool = True  # False drops optional per-round counts
 
 
 @dataclass
 class RoundMetrics:
+    """One round's record, written whole into the round's checkpoint
+    manifest. Every count is an ``observe()`` metric on a Spark job the
+    round runs anyway; none costs an action of its own."""
+
     round: int = 0
+    # frontier rows left after the seen anti-join and the merge aggregate;
+    # observed on that frame, inside the fetch job that fills the
+    # persisted selection
     candidates: int = 0
+    # candidates that pass the robots gate (observed on the gated frame in
+    # the same job); robots-blocked = candidates - allowed
     allowed: int = 0
     # `selected` is measured as the FETCHED row count (selected ⊆ web ⇒
     # equal for link-derived rows; may undercount when user seeds miss the
-    # web table or error rows are skipped) — `fetched` is the honest alias
+    # web table or error rows are skipped) — `fetched` is the honest alias.
+    # Observed on the fetch write (a count of the cached rows without a
+    # checkpoint dir).
     selected: int = 0
     fetched: int = 0
+    # rows of this round's frontier delta, observed on its write
     new_links: int = 0
+    # seen set after this round: the previous round's value (on resume,
+    # the last manifest's) plus the rows observed on the seen-delta write
     seen_size: int = 0
-    # Spark jobs triggered this round (statusTracker delta) — the per-round
-    # driver fixed cost is jobs × (scheduling + commit latency), so this is
-    # the number to drive DOWN; see BENCH.md round-5 jobs/round table.
+    # Spark jobs this round up to its commit (difference of the highest
+    # job id, so it stays right once spark.ui.retainedJobs evicts old
+    # ids) — the per-round fixed cost is jobs × (scheduling + commit
+    # latency), so this is the number to drive DOWN
     jobs: int = 0
     timings: dict = field(default_factory=dict)
+
+
+def _last_job_id(tracker) -> int:
+    """Highest job id the status tracker still lists; -1 before any job."""
+    return max(tracker.getJobIdsForGroup(None), default=-1)
+
+
+def _jobs_since(tracker, last_job_id: int) -> int:
+    """Jobs run since ``last_job_id`` was read. Job ids only grow, so the
+    difference counts them even after spark.ui.retainedJobs has evicted
+    old ids from the listing (whose length stops growing at that cap)."""
+    return max(0, _last_job_id(tracker) - last_job_id)
 
 
 class CrawlEngine:
@@ -146,6 +187,83 @@ class CrawlEngine:
         # parts, each localCheckpointed (with a checkpoint dir the log is
         # the on-disk delta files instead)
         self._parts: list[DataFrame] = []
+        self._build_plan_parts()
+
+    def _build_plan_parts(self) -> None:
+        """The parts of a round's plan that never change, built once per
+        engine: every Column and projection here costs Py4J round trips to
+        the JVM to build, and a round would otherwise rebuild them all."""
+        cfg = self.cfg
+        self._count = F.count(F.lit(1)).alias("n")
+        self._surt = surt_key(F.col("urim"))
+        self._unseen_on = F.col("__surt") == F.col("surt")
+        self._delta_surt = F.col("__surt").alias("surt")
+        self._merge = merge_aggs()
+        self._web_meta = self.web.select("urim", "urir", "host", "priority")
+        self._web_fetch = self.web.select(
+            "urim", "memento_datetime", "damage", "image_id", "outlinks"
+        )
+        self._gate = RobotsGate(self.robots) if self.robots is not None else None
+
+        # politeness: per-host budget, capped by crawl_delay when the robots
+        # gate carries it (see _politeness_select)
+        budget = F.lit(cfg.per_host_budget)
+        if cfg.round_seconds and self._gate is not None:
+            by_delay = F.floor(
+                F.lit(float(cfg.round_seconds)) / F.col("crawl_delay")
+            ).cast("int")
+            budget = F.when(
+                F.col("crawl_delay") > 0,
+                F.least(budget, F.greatest(F.lit(1), by_delay)),
+            ).otherwise(budget)
+        order = (F.col("priority").desc(), F.col("urim").asc())
+        self._rank = F.row_number().over(
+            Window.partitionBy("host").orderBy(*order)
+        )
+        self._in_budget = F.col("__rn") <= budget
+        self._salt = F.pmod(F.xxhash64(F.col("urim")), F.lit(cfg.salt_hot_hosts))
+        self._salt_rank = F.row_number().over(
+            Window.partitionBy("host", "__salt").orderBy(*order)
+        )
+        self._in_salt_budget = F.col("__rn1") <= budget
+
+        # fetch: payload join, verify UDF and lineage columns
+        self._images = (
+            self.images.hint("shuffle_hash") if self.images is not None else None
+        )
+        self._par = self.spark.sparkContext.defaultParallelism
+        self._verify = None
+        self._capture = False  # fetched rows carry a fetch_err column
+        if self.images is not None and cfg.verify_payload:
+            from hypercane_spark.operators.multimodal import payload_verify_udf
+
+            self._capture = self.errors is not None
+            self._verify = payload_verify_udf(
+                psnr_sample_mod=cfg.psnr_sample_mod,
+                capture_errors=self._capture,
+            )(F.col("image_id"), F.col("bytes"), F.col("phash"))
+            self._verify_fields = [
+                F.col("__v.phash_ok").alias("phash_ok"),
+                F.col("__v.psnr_db").alias("psnr_db"),
+            ] + ([F.col("__v.err").alias("fetch_err")] if self._capture else [])
+            self._n_err = F.sum(
+                F.col("fetch_err").isNotNull().cast("long")
+            ).alias("n_err")
+        self._lineage = {
+            "fetch_ts": F.current_timestamp(),
+            "http_status": F.lit(200),
+            "partition_id": F.spark_partition_id(),
+        }
+        self._fetched_schema = None  # the fetched table's, from round one
+
+        # link extraction
+        self._link_cols = [
+            F.col("urim").alias("discovered_from"),
+            F.col("depth").alias("__pd"),
+            F.explode("outlinks").alias("urim"),
+        ]
+        self._link_depth = (F.col("__pd") + 1).cast("int")
+        self._link_depth_ok = self._link_depth <= cfg.max_depth
 
     # -------------------------------------------------------------- seeds
 
@@ -154,13 +272,13 @@ class CrawlEngine:
         table for (urir, host, priority), depth 0."""
         return (
             seeds.select("urim")
-            .join(self.web.select("urim", "urir", "host", "priority"), "urim")
+            .join(self._web_meta, "urim")
             .withColumn("depth", F.lit(0))
             .withColumn("discovered_from", F.lit(None).cast("string"))
         )
 
     def empty_seen(self) -> DataFrame:
-        return self.spark.createDataFrame([], "surt string")
+        return self.spark.createDataFrame([], SEEN_SCHEMA)
 
     def _union_parts(self) -> DataFrame:
         """ckpt-less frontier log: the in-memory delta parts (seed
@@ -170,24 +288,30 @@ class CrawlEngine:
             raw = raw.unionByName(p)
         return raw
 
+    def _counted(
+        self, df: DataFrame, *extra
+    ) -> tuple[DataFrame, Observation]:
+        """``df`` with its row count (``n``, plus any ``extra`` metrics)
+        observed by whatever action first runs it."""
+        obs = Observation()
+        return df.observe(obs, self._count, *extra), obs
+
     # -------------------------------------------------------------- round
 
-    @staticmethod
-    def _not_seen(frontier: DataFrame, seen: DataFrame) -> DataFrame:
+    def _not_seen(self, frontier: DataFrame, seen: DataFrame) -> DataFrame:
         """Exact seen dedup: one LEFT ANTI join on surt(urim). The seen
         side is shuffled every round anyway, so a probabilistic prefilter
         could only spare the candidate-side shuffle of rows it proves new,
         and paid more than that for its probe, build and broadcast
         (BENCH.md, seen-set A/B)."""
-        cand = frontier.withColumn("__surt", surt_key(F.col("urim")))
-        return cand.join(seen, cand["__surt"] == seen["surt"], "left_anti")
+        cand = frontier.withColumn("__surt", self._surt)
+        return cand.join(seen, self._unseen_on, "left_anti")
 
-    def _politeness_select(
-        self, allowed: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """→ (selected, deferred). Per-host budget window; the SQL-oracle-
-        checkable core of the scheduler (see entry_queries politeness
-        query).
+    def _politeness_select(self, allowed: DataFrame) -> DataFrame:
+        """→ selected. Per-host budget window; the SQL-oracle-checkable
+        core of the scheduler (see entry_queries politeness query). Rows
+        past the budget need no output: they stay in the delta log and
+        re-surface from the next round's merge-on-read scan.
 
         Skew: a Zipf-hot host can hold a large share of the frontier, and a
         single ``partitionBy(host)`` window serializes that whole host into
@@ -199,61 +323,30 @@ class CrawlEngine:
         so phase 2's authoritative per-host window sees ≤ budget·S rows per
         host instead of the full queue. Same selected set, same order:
         any row in the true per-host top-budget is in its salt's top-budget.
-        Deferred rows (beyond budget) skip phase 1 by construction — they
-        are recovered by anti-joining selected against allowed.
 
-        With ``cfg.round_seconds`` set and a ``crawl_delay`` column present
-        (robots_gate carries it), the per-host cap becomes
+        With ``cfg.round_seconds`` set and a robots table (robots_gate
+        carries its ``crawl_delay`` column), the per-host cap becomes
         ``min(budget, max(1, floor(round_seconds / crawl_delay)))`` — the
         crawl-delay directive translated into this engine's round-batched
         schedule (delay ≤ 0 / absent → plain budget; the max(1,…) floor
         guarantees progress). crawl_delay is constant per host, so the cap
         is still a single window filter."""
-        budget = F.lit(self.cfg.per_host_budget)
-        if self.cfg.round_seconds and "crawl_delay" in allowed.columns:
-            by_delay = F.floor(
-                F.lit(float(self.cfg.round_seconds)) / F.col("crawl_delay")
-            ).cast("int")
-            budget = F.when(
-                F.col("crawl_delay") > 0,
-                F.least(budget, F.greatest(F.lit(1), by_delay)),
-            ).otherwise(budget)
-        w = Window.partitionBy("host").orderBy(
-            F.col("priority").desc(), F.col("urim").asc()
-        )
         if self.cfg.salt_hot_hosts > 1:
-            salt = F.pmod(F.xxhash64(F.col("urim")), F.lit(self.cfg.salt_hot_hosts))
-            w1 = Window.partitionBy("host", "__salt").orderBy(
-                F.col("priority").desc(), F.col("urim").asc()
-            )
-            pruned = (
-                allowed.withColumn("__salt", salt)
-                .withColumn("__rn1", F.row_number().over(w1))
-                .where(F.col("__rn1") <= budget)
+            allowed = (
+                allowed.withColumn("__salt", self._salt)
+                .withColumn("__rn1", self._salt_rank)
+                .where(self._in_salt_budget)
                 .drop("__rn1", "__salt")
             )
-            selected = (
-                pruned.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= budget)
-                .drop("__rn")
-            )
-            deferred = allowed.join(
-                selected.select("urim"), on="urim", how="left_anti"
-            )
-            return selected, deferred
-        ranked = allowed.withColumn("__rn", F.row_number().over(w))
-        selected = ranked.where(F.col("__rn") <= budget).drop("__rn")
-        deferred = ranked.where(F.col("__rn") > budget).drop("__rn")
-        return selected, deferred
+        return (
+            allowed.withColumn("__rn", self._rank)
+            .where(self._in_budget)
+            .drop("__rn")
+        )
 
     def _fetch(self, selected: DataFrame, rnd: int) -> DataFrame:
-        fetched = selected.join(
-            self.web.select(
-                "urim", "memento_datetime", "damage", "image_id", "outlinks"
-            ),
-            "urim",
-        )
-        if self.images is not None:
+        fetched = selected.join(self._web_fetch, "urim")
+        if self._images is not None:
             # NOT broadcast: the payload dim carries image bytes (tens of MB
             # per 1k images at sandbox scale, unbounded at 10^10), and a
             # broadcast would be rebuilt from the driver EVERY round. A
@@ -269,57 +362,31 @@ class CrawlEngine:
             # local[32] wall time). A user-specified partition count is
             # exempt from AQE coalescing and co-locates with the persisted
             # images partitioning.
-            par = self.spark.sparkContext.defaultParallelism
-            fetched = fetched.repartition(par, "image_id").join(
-                self.images.hint("shuffle_hash"), "image_id", "left"
+            fetched = fetched.repartition(self._par, "image_id").join(
+                self._images, "image_id", "left"
             )
-            if self.cfg.verify_payload:
+            if self._verify is not None:
                 # input_hint per-row fidelity, computed in the fetch stage
                 # itself (Arrow-batched, rides the fetched rows in place)
-                from hypercane_spark.operators.multimodal import (
-                    payload_verify_udf,
+                fetched = (
+                    fetched.withColumn("__v", self._verify)
+                    .select("*", *self._verify_fields)
+                    .drop("__v")
                 )
+        return fetched.withColumns({"round": F.lit(rnd), **self._lineage})
 
-                capture = self.errors is not None
-                v = payload_verify_udf(
-                    psnr_sample_mod=self.cfg.psnr_sample_mod,
-                    capture_errors=capture,
-                )(
-                    F.col("image_id"), F.col("bytes"), F.col("phash")
-                )
-                fields = ["__v.phash_ok", "__v.psnr_db"] + (
-                    ["__v.err"] if capture else []
-                )
-                fetched = fetched.withColumn("__v", v).select(
-                    "*", *fields
-                ).drop("__v")
-                if capture:
-                    fetched = fetched.withColumnRenamed("err", "fetch_err")
-        return (
-            fetched.withColumn("round", F.lit(rnd))
-            .withColumn("fetch_ts", F.current_timestamp())
-            .withColumn("http_status", F.lit(200))
-            .withColumn("partition_id", F.spark_partition_id())
-        )
-
-    def _extract_links(
-        self, fetched: DataFrame, seen: DataFrame, rnd: int
-    ) -> DataFrame:
+    def _extract_links(self, fetched: DataFrame, seen: DataFrame) -> DataFrame:
         links = (
-            fetched.select(
-                F.col("urim").alias("discovered_from"),
-                F.col("depth").alias("__pd"),
-                F.explode("outlinks").alias("urim"),
-            )
-            .where(F.col("__pd") + 1 <= self.cfg.max_depth)
-            .join(self.web.select("urim", "urir", "host", "priority"), "urim")
-            .withColumn("depth", (F.col("__pd") + 1).cast("int"))
+            fetched.select(*self._link_cols)
+            .where(self._link_depth_ok)
+            .join(self._web_meta, "urim")
+            .withColumn("depth", self._link_depth)
             .drop("__pd")
         )
         # collapse duplicate discoveries: max priority, min discoverer
-        links = merge_frontier(links.withColumn("__surt", surt_key(F.col("urim"))))
+        links = merge_frontier(links.withColumn("__surt", self._surt), self._merge)
         # drop already-seen
-        links = links.join(seen, links["__surt"] == seen["surt"], "left_anti")
+        links = links.join(seen, self._unseen_on, "left_anti")
         return links.drop("__surt")
 
     def run(
@@ -331,11 +398,15 @@ class CrawlEngine:
         With a checkpoint dir, each round persists frontier+seen+fetched and
         ``resume=True`` continues from the latest complete round."""
         spark = self.spark
-        start_round = 0
-        if resume and self.ckpt and self.ckpt.rounds():
-            start_round = self.ckpt.rounds()[-1]
-            seen = self.ckpt.read_seen(spark, start_round)
-            start_round += 1
+        start_round, seen_size = 0, 0
+        done = self.ckpt.rounds() if resume and self.ckpt else []
+        if done:
+            seen = self.ckpt.read_seen(spark, done[-1])
+            # the running seen size continues from the last round's record
+            seen_size = self.ckpt.manifest(done[-1]).get("seen_size")
+            if seen_size is None:  # a manifest written without it
+                seen_size = seen.count()
+            start_round = done[-1] + 1
         else:
             if self.ckpt:
                 # one-time seed snapshot — the 'round -1' frontier delta;
@@ -349,11 +420,9 @@ class CrawlEngine:
         tracker = spark.sparkContext.statusTracker()
         for rnd in range(start_round, self.cfg.max_rounds):
             m = RoundMetrics(round=rnd)
-            # jobs/round accounting: the engine never sets job groups, so
-            # every job (main thread AND checkpoint writer threads) lands in
-            # the default group — the before/after delta is this round's
-            # job count, the per-round driver fixed-cost driver.
-            jobs_before = len(tracker.getJobIdsForGroup(None))
+            # jobs/round accounting: every job this round runs (main thread
+            # AND checkpoint writer threads) takes the next job id
+            first_job = _last_job_id(tracker)
             t0 = time.time()
 
             # MERGE-ON-READ: the frontier is never materialized as a
@@ -373,11 +442,12 @@ class CrawlEngine:
             # log is O(new links). Iceberg analog: merge-on-read table,
             # compact() = rewrite_data_files.
             #
-            # The seen-dedup is left lazy: its work folds into the
-            # schedule/fetch jobs below. selected == 0 subsumes the
-            # candidates == 0 stop (selected ⊆ candidates, and a nonzero
-            # robots-allowed set always selects ≥ 1 under budget ≥ 1), so
-            # no separate count action is needed per round.
+            # The seen-dedup is left lazy: its work folds into the fetch
+            # job below, which also reports the candidate and robots-
+            # allowed counts through observations. selected == 0 subsumes
+            # the candidates == 0 stop (selected ⊆ candidates, and a
+            # nonzero robots-allowed set always selects ≥ 1 under budget
+            # ≥ 1), so no separate count action is needed per round.
             log = (
                 self.ckpt.read_frontier_log(spark, rnd - 1)
                 if self.ckpt
@@ -388,25 +458,20 @@ class CrawlEngine:
             # seen is keyed on surt(urim) so a urim's copies are all-seen or
             # all-new. At steady state most log rows ARE seen; without the
             # pushdown the merge would shuffle the whole log every round.
-            cand = merge_frontier(self._not_seen(log, seen))
-            if self.cfg.collect_metrics:
-                m.candidates = cand.count()
+            cand, cand_obs = self._counted(
+                merge_frontier(self._not_seen(log, seen), self._merge)
+            )
             m.timings["dedup"] = time.time() - t0
 
             t = time.time()
-            # crawl_delay must survive until AFTER _politeness_select — the
-            # round_seconds cap reads it there (dropping it here made the
-            # per-host crawl-delay budget a silent no-op)
-            allowed = (
-                robots_gate(cand, self.robots, url="urir", host="host")
-                if self.robots is not None
-                else cand
-            )
-            # deferred rows need no explicit carry: anything discovered but
-            # not selected stays in the delta log and re-surfaces from the
-            # next round's merge-on-read scan
-            selected, _deferred = self._politeness_select(allowed)
-            if "crawl_delay" in selected.columns:
+            allowed, allowed_obs = cand, cand_obs
+            if self._gate is not None:
+                # crawl_delay must survive until AFTER _politeness_select —
+                # the round_seconds cap reads it there (dropping it earlier
+                # made the per-host crawl-delay budget a silent no-op)
+                allowed, allowed_obs = self._counted(self._gate(cand))
+            selected = self._politeness_select(allowed)
+            if self._gate is not None:
                 selected = selected.drop("crawl_delay")
             selected = selected.persist()
             m.timings["schedule"] = time.time() - t
@@ -417,7 +482,6 @@ class CrawlEngine:
             # left). One driver action fewer per round — at 10^10 scale the
             # per-round driver round-trips ARE the iterative bottleneck.
             fetched_full = self._fetch(selected.drop("__surt"), rnd)
-            obs = None
             if self.ckpt:
                 # Production shape: fetch+verify runs ONCE, payload rows
                 # land directly in the round's columnar table, and the
@@ -430,23 +494,21 @@ class CrawlEngine:
                 # observe() metric — the separate post-write count job was
                 # pure per-round fixed cost (parquet-stats scan, but still
                 # a scheduled job).
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                obs_metrics = [F.count(F.lit(1)).alias("n")]
-                if "fetch_err" in fetched_full.columns:
-                    obs_metrics.append(
-                        F.sum(
-                            F.col("fetch_err").isNotNull().cast("long")
-                        ).alias("n_err")
-                    )
-                self.ckpt.write_fetched(
-                    rnd, fetched_full.observe(obs, *obs_metrics)
+                if self._fetched_schema is None:
+                    self._fetched_schema = fetched_full.schema
+                observed, fetch_obs = self._counted(
+                    fetched_full, *([self._n_err] if self._capture else [])
                 )
-                fetched = self.ckpt.read_fetched(spark, rnd)
+                self.ckpt.write_fetched(rnd, observed)
+                fetched = self.ckpt.read_fetched(
+                    spark, rnd, schema=self._fetched_schema
+                )
+                got = fetch_obs.get
+                n_err = (got["n_err"] or 0) if self._capture else 0
+                m.selected = m.fetched = got["n"] - n_err
             else:
                 fetched = fetched_full.persist()
-            if self.errors is not None and "fetch_err" in fetched.columns:
+            if self._capture:
                 # skip-not-abort: poisoned payloads land in the errors
                 # table and drop out of the crawl output; their surts are
                 # still marked seen (via selected) so they are never
@@ -462,11 +524,7 @@ class CrawlEngine:
                 fetched = fetched.where(F.col("fetch_err").isNull()).drop(
                     "fetch_err"
                 )
-            if obs is not None:
-                row = obs.get  # dict of observed metrics
-                n_err = int(row.get("n_err") or 0) if self.errors else 0
-                m.selected = m.fetched = int(row["n"]) - n_err
-            else:
+            if not self.ckpt:
                 m.selected = m.fetched = fetched.count()
             m.timings["fetch"] = time.time() - t
             if m.selected == 0:
@@ -482,6 +540,10 @@ class CrawlEngine:
                     if not self.ckpt:
                         fetched.unpersist(blocking=False)
                     break
+            # read only past the stop check: on an empty round AQE prunes
+            # the observed subtree and the observation comes back empty
+            m.candidates = cand_obs.get["n"]
+            m.allowed = allowed_obs.get["n"]
 
             t = time.time()
 
@@ -489,10 +551,23 @@ class CrawlEngine:
             # surts (distinct within the round; disjoint from `seen` by
             # construction — every candidate passed the seen anti-join).
             # The union IS the seen set; nothing is ever rewritten.
-            delta = selected.select(F.col("__surt").alias("surt")).distinct()
-            new_seen = seen.unionByName(delta)
-            links = self._extract_links(fetched, new_seen, rnd)
+            delta = selected.select(self._delta_surt).distinct()
+            links, links_obs = self._counted(
+                self._extract_links(fetched, seen.unionByName(delta))
+            )
+            # observed on the written frame only: the links plan reads
+            # `delta` too, and when AQE prunes its anti-join (no links) it
+            # would report an observation placed on `delta` empty
+            delta_out, delta_obs = self._counted(delta)
             m.timings["links"] = time.time() - t
+
+            def record() -> dict:
+                nonlocal seen_size
+                m.new_links = links_obs.get["n"]
+                seen_size += delta_obs.get["n"]
+                m.seen_size = seen_size
+                m.jobs = _jobs_since(tracker, first_job)
+                return asdict(m)
 
             t = time.time()
             if self.ckpt:
@@ -500,17 +575,14 @@ class CrawlEngine:
                 # newly-seen surts AND this round's newly-discovered links
                 # (the frontier delta). Nothing else — the merged frontier
                 # is never written (or cached) anywhere; the next round's
-                # merge-on-read scan consumes these files directly.
+                # merge-on-read scan consumes these files directly. The
+                # manifest, written last, is the round's RoundMetrics.
                 self.ckpt.write(
                     rnd,
                     links,
-                    delta,
+                    delta_out,
                     None,  # fetched already written at fetch time
-                    {
-                        "candidates": m.candidates,
-                        "selected": m.selected,
-                        "timings": m.timings,
-                    },
+                    record,
                 )
                 if (
                     self.cfg.compact_every
@@ -530,14 +602,11 @@ class CrawlEngine:
                 # two independent materializations overlap
                 with ThreadPoolExecutor(max_workers=2) as ex:
                     fut_l = ex.submit(links.localCheckpoint)
-                    fut_d = ex.submit(delta.localCheckpoint)
+                    fut_d = ex.submit(delta_out.localCheckpoint)
                     self._parts.append(fut_l.result())
                     seen = seen.unionByName(fut_d.result())
+                record()
             m.timings["checkpoint"] = time.time() - t
-            if self.cfg.collect_metrics:
-                m.seen_size = seen.count()
-            m.jobs = len(tracker.getJobIdsForGroup(None)) - jobs_before
-            m.new_links = 0
             if m.selected:
                 fetched_parts.append(fetched)
             elif not self.ckpt:

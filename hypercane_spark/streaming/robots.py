@@ -17,6 +17,38 @@ from pyspark.sql import functions as F
 from hypercane_spark.functions.urls import url_path
 
 
+class RobotsGate:
+    """The gate's plan pieces, built once per robots table: the broadcast
+    rules side, the join condition and the blocked predicate. A crawl
+    applies the same gate every round, so it builds these once instead of
+    once per round."""
+
+    def __init__(self, robots: DataFrame, url: str = "urir", host: str = "host"):
+        self.rules = F.broadcast(
+            robots.select(
+                F.col("host").alias("__rhost"),
+                F.col("disallow").alias("__disallow"),
+                F.col("crawl_delay").alias("crawl_delay"),
+            )
+        )
+        self.on = F.col(host) == F.col("__rhost")
+        path = url_path(F.col(url))
+        eff_path = F.when(path == "", "/").otherwise(path)
+        self.allowed = ~F.exists(
+            F.coalesce(F.col("__disallow"), F.array().cast("array<string>")),
+            lambda d: eff_path.startswith(d),
+        )
+        self.delay = F.coalesce(F.col("crawl_delay"), F.lit(0.0))
+
+    def __call__(self, frontier: DataFrame) -> DataFrame:
+        return (
+            frontier.join(self.rules, self.on, "left")
+            .where(self.allowed)
+            .withColumn("crawl_delay", self.delay)
+            .drop("__rhost", "__disallow")
+        )
+
+
 def robots_gate(
     frontier: DataFrame,
     robots: DataFrame,
@@ -25,22 +57,4 @@ def robots_gate(
 ) -> DataFrame:
     """Drop frontier rows whose URL path matches a disallow prefix for its
     host. Hosts absent from the robots table are allowed (crawl_delay 0)."""
-    r = robots.select(
-        F.col("host").alias("__rhost"),
-        F.col("disallow").alias("__disallow"),
-        F.col("crawl_delay").alias("crawl_delay"),
-    )
-    j = frontier.join(
-        F.broadcast(r), frontier[host] == F.col("__rhost"), "left"
-    )
-    path = url_path(F.col(url))
-    eff_path = F.when(path == "", "/").otherwise(path)
-    blocked = F.exists(
-        F.coalesce(F.col("__disallow"), F.array().cast("array<string>")),
-        lambda d: eff_path.startswith(d),
-    )
-    return (
-        j.where(~blocked)
-        .withColumn("crawl_delay", F.coalesce(F.col("crawl_delay"), F.lit(0.0)))
-        .drop("__rhost", "__disallow")
-    )
+    return RobotsGate(robots, url=url, host=host)(frontier)

@@ -41,7 +41,12 @@ class StateStore:
     def write_table(self, df: DataFrame, path: str) -> None:
         raise NotImplementedError
 
-    def read_table(self, spark: SparkSession, *paths: str) -> DataFrame:
+    def read_table(
+        self, spark: SparkSession, *paths: str, schema=None
+    ) -> DataFrame:
+        """``schema`` (DDL string or StructType), when given, is the
+        tables' known schema: a binding that would otherwise infer it from
+        the files uses it instead."""
         raise NotImplementedError
 
     def table_exists(self, path: str) -> bool:
@@ -80,8 +85,13 @@ class ParquetStateStore(StateStore):
     def write_table(self, df: DataFrame, path: str) -> None:
         df.write.mode("overwrite").parquet(path)
 
-    def read_table(self, spark: SparkSession, *paths: str) -> DataFrame:
-        return spark.read.parquet(*paths)
+    def read_table(
+        self, spark: SparkSession, *paths: str, schema=None
+    ) -> DataFrame:
+        # without a schema the reader runs a footer-inference Spark job on
+        # every call; the engine's state tables have fixed schemas
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     def table_exists(self, path: str) -> bool:
         return os.path.isdir(path)
@@ -155,7 +165,10 @@ class IcebergStateStore(StateStore):
         self._require(df.sparkSession)
         df.writeTo(self.identifier(path)).using("iceberg").createOrReplace()
 
-    def read_table(self, spark: SparkSession, *paths: str) -> DataFrame:
+    def read_table(
+        self, spark: SparkSession, *paths: str, schema=None
+    ) -> DataFrame:
+        # the catalog holds each table's schema; ``schema`` is not needed
         self._require(spark)
         out = None
         for p in paths:  # delta-chain union == snapshot-forward read

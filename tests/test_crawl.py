@@ -4,6 +4,7 @@ bloom/cuckoo behavior, robots gating, checkpoint/resume."""
 from __future__ import annotations
 
 import re
+from dataclasses import asdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +15,13 @@ from hypercane_spark.streaming.bloom import (
     bloom_might_contain,
     build_bloom,
 )
-from hypercane_spark.streaming.frontier import CrawlConfig, CrawlEngine
+from hypercane_spark.streaming.checkpoint import RoundCheckpoint
+from hypercane_spark.streaming.frontier import (
+    CrawlConfig,
+    CrawlEngine,
+    _jobs_since,
+    _last_job_id,
+)
 from hypercane_spark.streaming.robots import robots_gate
 from hypercane_spark.synth import gen_link_graph, gen_robots
 
@@ -152,6 +159,13 @@ def test_crawl_resume_equivalence(spark, web, robots, seeds, tmp_path):
     f2 = resumed.run(seed_df, resume=True)
     order_joined = part.pop_order(f1) + resumed.pop_order(f2)
     assert order_joined == order_full
+    # the resumed engine's running seen size starts from the last manifest
+    first = resumed.metrics[0]
+    assert first.seen_size == (
+        part.ckpt.manifest(first.round - 1)["seen_size"]
+        + resumed.ckpt.read_seen_delta(spark, first.round).count()
+    )
+    assert _counts(part.metrics + resumed.metrics) == _counts(full.metrics)
 
 
 def test_seen_dedup_is_one_exact_anti_join(spark, web, robots, seeds, tmp_path):
@@ -247,3 +261,102 @@ def test_cuckoo_insert_many_vectorized():
     assert keys[0] not in cf
     assert cf.insert(keys[0])
     assert keys[0] in cf
+
+
+def _counts(metrics) -> list[dict]:
+    """RoundMetrics without the fields that vary run to run."""
+    return [
+        {k: v for k, v in asdict(m).items() if k not in ("jobs", "timings")}
+        for m in metrics
+    ]
+
+
+def test_round_metrics_match_independent_counts(
+    spark, web, web_rows, robots, robots_rows, seeds, tmp_path
+):
+    """Every RoundMetrics count, filled from observations on jobs the
+    round runs anyway, equals a count taken independently from the
+    checkpoint, the robots gate and the sequential oracle; the checkpoint-
+    less engine reports the same counts; the manifest holds the record."""
+    rounds = 5
+    cfg = CrawlConfig(per_host_budget=4, max_depth=3, max_rounds=rounds)
+    seed_df = spark.createDataFrame([(u,) for u in seeds], "urim string")
+    eng = CrawlEngine(
+        spark, web, robots=robots, checkpoint_dir=str(tmp_path / "ck"),
+        config=cfg,
+    )
+    eng.run(seed_df)
+    assert [m.round for m in eng.metrics] == list(range(rounds))
+
+    pops = [
+        len(crawl_oracle(web_rows, seeds, robots=robots_rows,
+                         per_host_budget=4, max_depth=3, max_rounds=r)[0])
+        for r in range(rounds + 1)
+    ]
+    ck = eng.ckpt
+    for m in eng.metrics:
+        r = m.round
+        _, frontier, _ = ck.read(spark, r - 1)
+        assert m.candidates == frontier.count(), r
+        assert m.allowed == robots_gate(frontier, robots).count(), r
+        assert m.selected == m.fetched == pops[r + 1] - pops[r], r
+        assert m.new_links == ck.read_frontier_delta(spark, r).count(), r
+        assert m.seen_size == ck.read_seen(spark, r).count(), r
+        assert m.jobs > 0
+        want = asdict(m)
+        # the checkpoint step's own time is taken after its manifest commit
+        del want["timings"]["checkpoint"]
+        assert ck.manifest(r) == want, r
+    assert any(m.allowed < m.candidates for m in eng.metrics)  # robots bite
+
+    mem = CrawlEngine(spark, web, robots=robots, config=cfg)
+    mem.run(seed_df)
+    assert _counts(mem.metrics) == _counts(eng.metrics)
+
+
+def test_state_reads_launch_no_spark_job(spark, tmp_path):
+    """The per-round state reads hand the store their schema, so building
+    the seen and frontier-log frames runs no footer-inference job."""
+    ck = RoundCheckpoint(str(tmp_path / "ck"))
+    frontier = spark.createDataFrame(
+        [("https://a.example/m", "http://a.example/", "a.example", 1.0, 0, None)],
+        "urim string, urir string, host string, priority double, depth int, "
+        "discovered_from string",
+    )
+    ck.write_seeds(frontier)
+    ck.write(0, frontier, spark.createDataFrame([("a,example)/",)], "surt string"),
+             None, {})
+    tracker = spark.sparkContext.statusTracker()
+    before = _last_job_id(tracker)
+    seen = ck.read_seen(spark, 0)
+    log = ck.read_frontier_log(spark, 0)
+    assert _jobs_since(tracker, before) == 0
+    assert seen.columns == ["surt"] and "priority" in log.columns
+    assert log.count() == 2 and seen.count() == 1
+
+
+class EvictingTracker:
+    """Status-tracker stub that lists only the newest ``keep`` job ids, as
+    Spark does once spark.ui.retainedJobs evicts older jobs."""
+
+    def __init__(self, keep: int):
+        self.keep, self.next_id = keep, 0
+
+    def run_jobs(self, n: int) -> None:
+        self.next_id += n
+
+    def getJobIdsForGroup(self, group):
+        return list(range(self.next_id - 1, max(-1, self.next_id - 1 - self.keep), -1))
+
+
+def test_jobs_per_round_survives_evicted_job_history():
+    tracker = EvictingTracker(keep=5)
+    assert _last_job_id(tracker) == -1
+    tracker.run_jobs(3)
+    first = _last_job_id(tracker)
+    tracker.run_jobs(12)  # the listing stays capped at 5 ids
+    assert len(tracker.getJobIdsForGroup(None)) == 5
+    assert _jobs_since(tracker, first) == 12
+    # a listing that lost every id reads as no jobs, never as negative
+    tracker.keep = 0
+    assert _jobs_since(tracker, first) == 0

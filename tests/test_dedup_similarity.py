@@ -180,6 +180,37 @@ def test_frame_sample_stand_in_container(spark):
         np.testing.assert_array_equal(fr, frames[k])
 
 
+def test_frame_sample_bad_container_recorded_not_aborting(spark, tmp_path):
+    from hypercane_spark.errors import ErrorStore
+    from hypercane_spark.synth import gen_videos, iter_video_frames
+
+    rows = gen_videos(3)
+    bad = rows[1]["video_id"]
+    df = spark.createDataFrame(
+        [
+            # the poisoned payload: a container cut off halfway
+            (r["video_id"], r["bytes"][: len(r["bytes"]) // 2]
+             if r["video_id"] == bad else r["bytes"])
+            for r in rows
+        ],
+        "video_id string, bytes binary",
+    )
+    store = ErrorStore(str(tmp_path / "errors"))
+    out = M.frame_sample(df, every_n=4, store=store).collect()
+    assert {(r["video_id"], r["frame_idx"]) for r in out} == {
+        (r["video_id"], idx)
+        for r in rows
+        if r["video_id"] != bad
+        for idx, _ in iter_video_frames(r["bytes"], 4)
+    }
+    errs = store.read(spark).collect()
+    assert [e["uri"] for e in errs] == [bad]
+    assert errs[0]["stage"] == "frame_sample"
+    # without a store the same input aborts (fail-fast default)
+    with pytest.raises(Exception):
+        M.frame_sample(df, every_n=4).collect()
+
+
 def test_frame_sample_unknown_magic_raises(spark, images):
     vid = images.limit(1).withColumnRenamed("image_id", "video_id")
     with pytest.raises(Exception) as ei:

@@ -79,7 +79,7 @@ def test_engine_runs_through_custom_store(spark, tmp_path):
         checkpoint_dir=None,
         config=CrawlConfig(
             per_host_budget=20, max_depth=2, max_rounds=2,
-            verify_payload=False, collect_metrics=False,
+            verify_payload=False,
         ),
     )
     eng.ckpt = ckpt

@@ -3,12 +3,13 @@
 #   spark-submit --py-files <packaged lib> bench.py --crawl-only
 #
 # Usage: tools/submit_crawl.sh [MASTER] [extra bench env...]
-#   MASTER defaults to local[$SPARK_GRAFT_CPUS] (default 32).
+#   MASTER defaults to local[$SPARK_GRAFT_CPUS] (default: the host's CPUs).
 # On a real cluster, point MASTER at yarn/k8s and the same artifact runs
 # unchanged — bench.py only touches the packaged hypercane_spark library.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-MASTER="${1:-local[${SPARK_GRAFT_CPUS:-32},8]}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+MASTER="${1:-local[${CPUS},8]}"
 
 ZIP="$(mktemp -d)/hypercane_spark.zip"
 (cd "$REPO" && python - "$ZIP" <<'PY'
@@ -28,6 +29,6 @@ PY
 exec spark-submit \
   --master "$MASTER" \
   --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
+  --conf spark.sql.shuffle.partitions="${CPUS}" \
   --py-files "$ZIP" \
   "$REPO/bench.py" --crawl-only
